@@ -12,32 +12,22 @@ Each query is checked against its DuckDB oracle from
 
 from __future__ import annotations
 
-import math
 import os
+import sys
 
 import numpy as np
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from check_correctness import normalize  # noqa: E402
 
 TABLES = ("orders", "lineitem", "documents", "embeddings")
 
 
-def normalize(rows, columns) -> list[list[str]]:
-    """Order-insensitive comparable form: columns sorted by name, floats
-    to 9 significant digits, rows sorted."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                vals.append("nan" if math.isnan(v) else f"{v:.9g}")
-            elif v is None:
-                vals.append("<null>")
-            else:
-                vals.append(str(v))
-        out.append(vals)
-    out.sort()
-    return [[columns[i] for i in order]] + out
+def comparable(rows, columns) -> list[list[str]]:
+    """``tools/check_correctness.normalize`` as one JSON-safe list: the
+    sorted column names, then the sorted stringified rows."""
+    cols, out = normalize(rows, columns)
+    return [cols] + [list(r) for r in out]
 
 
 def _connect(sf_dir: str, tmp_dir: str):
@@ -56,7 +46,7 @@ def _connect(sf_dir: str, tmp_dir: str):
 
 def _duckdb(con, sql: str) -> list[list[str]]:
     res = con.execute(sql)
-    return normalize(res.fetchall(), [d[0] for d in res.description])
+    return comparable(res.fetchall(), [d[0] for d in res.description])
 
 
 def _semdedup(con) -> list[list[str]]:
@@ -88,7 +78,7 @@ def _semdedup(con) -> list[list[str]]:
         hit = np.triu(cos >= cluster_q.SEM_THRESHOLD, k=1)
         removed = int(hit.any(axis=0).sum())
         rows.append((cid, n, removed, n - removed))
-    return normalize(rows, ["cluster_id", "n_points", "n_removed", "n_kept"])
+    return comparable(rows, ["cluster_id", "n_points", "n_removed", "n_kept"])
 
 
 def expected_outputs(sf_dir: str, queries: list[str], tmp_dir: str) -> dict[str, list]:

@@ -25,7 +25,6 @@ import subprocess
 import sys
 import time
 
-import oracles
 import procstat
 import tables
 import tweets
@@ -33,7 +32,11 @@ import tweets
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 ENGINE = "sentiment_analysis_bigdata_spark"
-DEADLINE_S = 170  # the whole run, child included
+# The whole run, child included: DEADLINE_S at the benchmark's own
+# run_seconds, and more for larger --seconds (BASE_S for set-up and the
+# cold pass, PER_PASS_S per warm pass, traced or not).
+DEADLINE_S = 170.0
+BASE_S, PER_PASS_S = 60.0, 25.0
 
 # Fixed step order per workload; the seed changes only the data.
 WORKLOADS: dict[str, dict] = {
@@ -79,6 +82,8 @@ def child_env(work: str) -> dict[str, str]:
 
 def prepare(workload: str, seed: int, work: str, tiny: bool) -> dict:
     """Seeded inputs and the outputs the engine must reproduce from them."""
+    import oracles  # reads tools/check_correctness.py, checked for in main()
+
     spec = WORKLOADS[workload]
     inputs = os.path.join(work, "input")
     if spec["kind"] == "sentiment":
@@ -121,9 +126,10 @@ def main() -> int:
     args = ap.parse_args()
     started = time.monotonic()
 
-    if not os.path.isdir(os.path.join(ROOT, ENGINE)):
-        print(f"engine package {ENGINE}/ not found under {ROOT}", file=sys.stderr)
-        return 2
+    for need in (ENGINE, os.path.join("tools", "check_correctness.py")):
+        if not os.path.exists(os.path.join(ROOT, need)):
+            print(f"{need} not found under {ROOT}", file=sys.stderr)
+            return 2
     sys.path.insert(0, ROOT)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -134,11 +140,15 @@ def main() -> int:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     spec = prepare(args.workload, args.seed, work, args.tiny)
+    warm = max(1, math.ceil(args.seconds / PASS_S - 1e-9))
+    # a traced run makes untraced/traced pairs, at least two (one ABBA block)
+    passes = 2 * max(2, warm) if args.trace else warm
+    deadline = max(DEADLINE_S, BASE_S + PER_PASS_S * passes)
     spec.update(
         workload=args.workload,
         repo=ROOT,
         work=work,
-        warm_passes=max(1, math.ceil(args.seconds / PASS_S - 1e-9)),
+        warm_passes=warm,
         trace=bool(args.trace),
         all_queries=ALL_QUERIES,
     )
@@ -155,7 +165,7 @@ def main() -> int:
         start_new_session=True,
     )
     try:
-        code = proc.wait(timeout=max(10.0, DEADLINE_S - (time.monotonic() - started)))
+        code = proc.wait(timeout=max(10.0, deadline - (time.monotonic() - started)))
     except subprocess.TimeoutExpired:
         code = None
     finally:
